@@ -211,30 +211,3 @@ def test_partitioned_dml_keeps_labels_consistent(engine):
     mt = engine.managed["pm"]
     assert {r.id for r in mt.scan_partitions(["p0"]).collect()} == set()
     assert {r.id for r in mt.scan_partitions(["p1"]).collect()} == {1, 2}
-
-
-def test_connected_components_star_algorithm(spark):
-    """Large-star/small-star connected components: a 6-node chain (worst
-    case for label propagation) plus a separate triangle and an isolated
-    pair all resolve to min-id components."""
-    from tidb_spark.data.cluster import connected_components, duplicate_clusters
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),   # chain
-         (10, 11), (11, 12), (10, 12),             # triangle
-         (20, 21),                                 # pair
-         (30, 30)],                                # self-loop: ignored
-        "d1 long, d2 long",
-    )
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components(edges).collect()
-    }
-    assert got == (
-        {(n, 1) for n in range(1, 7)}
-        | {(n, 10) for n in (10, 11, 12)}
-        | {(20, 20), (21, 20)}
-    )
-    clusters = duplicate_clusters(edges).collect()
-    sizes = {(r["doc_id"], r["canonical_id"], r["cluster_size"]) for r in clusters}
-    assert (6, 1, 6) in sizes and (12, 10, 3) in sizes and (21, 20, 2) in sizes

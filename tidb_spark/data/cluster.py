@@ -10,12 +10,18 @@ that in DuckDB) — fine for small graphs, O(diameter) rounds.
 At 100 TB the right algorithm is the alternating large-star / small-star
 map-reduce of Kiveris et al., "Connected Components in MapReduce and
 Beyond" (SoCC'14): each round is ONE groupBy (min-neighbor per node) plus
-ONE join, and the edge set converges to min-rooted stars in O(log n)
-rounds regardless of diameter — no per-vertex frontier like BFS, no
-driver-side union-find.  Every round ends in ``localCheckpoint`` to cut
-lineage (same harness discipline as ``graph/shortest.py``); convergence is
-detected by an order-insensitive edge-set checksum, so termination costs
-one tiny agg per round, not a full comparison join.
+ONE join on the node key, so AQE can split a skewed super-node's join —
+no per-vertex frontier like BFS, no driver-side union-find.  The rounds
+start from edges already contracted partition-locally (Łącki et al.,
+"Connected Components at Scale via Local Contractions", 2018): one
+``mapInArrow`` pass, with no shuffle, runs a vectorised union-find over
+each partition and emits min-rooted stars.  When the edge set fits one
+partition (AQE coalesces small inputs into one) that pass alone yields
+the answer and no round runs.  The stop is exact: the edge set has
+converged when it is a star forest (no node with two parents, no node
+both parent and child), one small agg per round; every round ends in
+``localCheckpoint`` to cut lineage (same harness discipline as
+``graph/shortest.py``).
 """
 
 from __future__ import annotations
@@ -75,16 +81,60 @@ def _small_star(e: DataFrame) -> DataFrame:
     return rewired.union(centers).where(F.col("u") != F.col("v")).distinct()
 
 
-def _checksum(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        # XOR-fold of per-edge hashes: order-insensitive and cannot
-        # overflow (edges are distinct, so XOR can't self-cancel dups).
-        F.coalesce(
-            F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _contract_partition(batches):
+    """``mapInArrow`` body: union-find over ONE partition's (u, v) edges,
+    emitting a (node, local min) star edge for every node that is not its
+    local component's minimum.  Vectorised: each pass hooks every
+    edge-spanning root onto the smaller root, then pointer-jumps until
+    every node points at a root; it stops when no edge spans two roots."""
+    import numpy as np
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    u, v = t.column("u").to_numpy(), t.column("v").to_numpy()
+    # Dense ids in value order: the smallest dense id is the smallest node.
+    ids, ends = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = ends[: len(u)], ends[len(u):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        span = ra != rb
+        if not span.any():
+            break
+        np.minimum.at(
+            parent, np.maximum(ra, rb)[span], np.minimum(ra, rb)[span]
+        )
+        while True:
+            up = parent[parent]
+            if (up == parent).all():
+                break
+            parent = up
+    leaf = parent != np.arange(len(ids))
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids[leaf], t.schema.field("u").type),
+            pa.array(ids[parent[leaf]], t.schema.field("v").type),
+        ],
+        names=["u", "v"],
+    )
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """The star rounds' exact fixpoint: every edge is (leaf, root) of a
+    min-rooted star — no node has two parents and no node is both a
+    parent and a child, i.e. every child appears in exactly one edge."""
+    ends = e.select(F.col("u").alias("n"), F.lit(1).alias("child")).union(
+        e.select(F.col("v").alias("n"), F.lit(0).alias("child"))
+    )
+    return (
+        ends.groupBy("n")
+        .agg(F.sum("child").alias("child"), F.count(F.lit(1)).alias("ends"))
+        .where((F.col("child") > 0) & (F.col("ends") > 1))
+        .isEmpty()
+    )
 
 
 def connected_components(
@@ -96,45 +146,38 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component
     id = the minimum node id in its connected component.  Undirected;
-    self-loops ignored.
+    self-loops ignored.  Raises ``RuntimeError`` when the edge set is not
+    a star forest after ``max_rounds`` star rounds.
 
-    Alternating large-star/small-star rounds; converges in O(log n)
-    rounds (each: one shuffle-agg + one shuffle-join, both on the node
-    key — AQE handles skewed super-nodes)."""
-    # Lazy checkpoints + pipelined checksums: the checksum action is what
-    # materializes each round's checkpoint (ONE fused job per round), and
-    # it runs on a helper thread so round n's checksum JOB overlaps round
-    # n+1's plan CONSTRUCTION — the same overlap discipline as
-    # operators/rounds.py, adapted to a fixpoint stop (checksum stable)
-    # instead of an empty-frontier stop.  The round built past the
-    # fixpoint is plan-only; it never executes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    e = _canon(edges, src, dst).localCheckpoint(eager=False)
-    prev: tuple[int, int] | None = None
-    with ThreadPoolExecutor(1) as pool:
-        fut = pool.submit(_checksum, e)
-        for _ in range(max_rounds):
-            nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
-            cur = fut.result()
-            if cur == prev:
-                break  # e already converged; nxt was never executed
-            prev = cur
-            fut = pool.submit(_checksum, nxt)
-            e = nxt
-        else:
-            fut.result()
-    # Converged edges are min-rooted stars: non-roots point at their root.
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
+    One partition-local contraction (no shuffle) turns each partition's
+    edges into min-rooted stars; if the union is not yet a star forest,
+    alternating large-star/small-star rounds (each one shuffle-agg plus
+    one shuffle-join on the node key, so AQE can split a skewed
+    super-node's join) run until it is."""
+    # Every checkpoint is lazy, but under AQE localCheckpoint still runs
+    # the frame's shuffle-map stages when it is called; the star-forest
+    # test then runs the last stage.  Each round therefore costs its
+    # stage jobs plus one test, and no round is built past the fixpoint.
+    canon = _canon(edges, src, dst)
+    e = canon.mapInArrow(_contract_partition, canon.schema).localCheckpoint(
+        eager=False
     )
-    assign = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = nodes.join(assign.select("node"), "node", "left_anti").select(
-        F.col("node"), F.col("node").alias("component")
-    )
-    return assign.union(roots)
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_rounds:
+            raise RuntimeError(
+                f"connected_components: no star forest after {max_rounds} rounds"
+            )
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        rounds += 1
+    # In a star forest the leaves point at their root (the component
+    # minimum) and the roots are exactly the distinct parents.
+    roots = e.select(
+        F.col("v").alias("node"), F.col("v").alias("component")
+    ).distinct()
+    return e.select(
+        F.col("u").alias("node"), F.col("v").alias("component")
+    ).union(roots)
 
 
 def duplicate_clusters(

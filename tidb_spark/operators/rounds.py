@@ -8,12 +8,14 @@ flow and each round is a distributed job, so ROUND LATENCY — not data
 volume — dominates at interactive scale, and two driver-side costs
 dominate round latency:
 
-1. **Plan compilation.**  ``localCheckpoint(eager=False)`` compiles the
-   physical plan at call time (~0.15-0.5 s if the plan shape is new:
-   Catalyst analysis plus Janino whole-stage-codegen class compilation).
-   Callers keep every round's plan the SAME SHAPE (flat checkpoint-scan
-   inputs re-checkpointed per round, no per-round literals) so the
-   codegen cache hits and compilation drops to ~0.05 s.
+1. **Plan compilation and shuffle stages.**  ``localCheckpoint(eager=
+   False)`` is not lazy under AQE: at call time it plans the round and
+   RUNS every shuffle-map stage of it (one job each); only the last
+   stage waits for the count.  Planning a new plan shape costs
+   ~0.15-0.5 s (Catalyst analysis plus Janino whole-stage-codegen class
+   compilation).  Callers keep every round's plan the SAME SHAPE (flat
+   checkpoint-scan inputs re-checkpointed per round, no per-round
+   literals) so the codegen cache hits and compilation drops to ~0.05 s.
 2. **The round-boundary count.**  The driver needs each round's row count
    (empty → stop; rows → broadcast decision for the next round's joins).
    Run serially that adds a blocking job per round.
@@ -22,13 +24,16 @@ This driver overlaps round h's count JOB with round h+1's plan
 CONSTRUCTION: round h+1 builds with the newest RESOLVED count (one round
 stale) as its broadcast-decision row estimate, and when the in-flight
 count lands on the other side of the broadcast threshold the round is
-re-planned with the exact count before anything executes (planning is
-re-done — cheap; no job ran).  The overlap is latency-only for the
-FRONTIER-side decision: those executed plans are exactly the ones exact
-counts would have chosen.  Callers whose builds also size an ACCUMULATED
-set (visited rows, CTE seen-keys) report that decision through the
-``replan`` hook so their threshold crossings re-plan the same way —
-without it, only the frontier crossing is detected (r6 ADVICE).
+re-built with the exact count (its shuffle-map stages run again, since
+the first build already ran them; its final stage has not run).  The
+overlap stays because a sequential variant (count, then build) was
+slower: mysqlsql_recursive_union 0.918 s → 0.990 s median over 13
+interleaved passes on a 4-core host.  The overlap is latency-only for
+the FRONTIER-side decision: those executed plans are exactly the ones
+exact counts would have chosen.  Callers whose builds also size an
+ACCUMULATED set (visited rows, CTE seen-keys) report that decision
+through the ``replan`` hook so their threshold crossings re-plan the same
+way — without it, only the frontier crossing is detected (r6 ADVICE).
 """
 
 from __future__ import annotations
@@ -76,8 +81,9 @@ def run_rounds(
             ):
                 # stale estimate landed on the wrong side of the
                 # broadcast threshold (frontier-side here, caller-side
-                # via replan): re-plan with the exact count (nothing
-                # has executed yet — planning cost only)
+                # via replan): re-build with the exact count (the first
+                # build's shuffle-map stages already ran under AQE; the
+                # re-built round runs its own)
                 exp = build(frontier, n, prev)
             if on_round is not None:
                 on_round(exp, prev)

@@ -121,9 +121,10 @@ ORDER BY doc_id
 def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: transitive closure of the exact
     8-gram-Jaccard near-dup pairs → (doc_id, canonical_id = min id in
-    cluster, cluster_size).  Connected components run as alternating
-    large-star/small-star rounds (O(log n) rounds of one groupBy + one
-    join — the 100 TB shape; `data/cluster.py`); the oracle walks the
+    cluster, cluster_size).  Connected components run as a
+    partition-local union-find contraction, then large-star/small-star
+    rounds (one groupBy + one join each — the 100 TB shape) until the
+    edge set is a star forest (`data/cluster.py`); the oracle walks the
     same edges with DuckDB's recursive CTE, the reference's own
     formulation of reachability (its recursive-CTE executor)."""
     from tidb_spark.data import cluster as cl
@@ -2987,7 +2988,8 @@ def dedup_ensemble_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape: no single dedup signal catches everything, and
     clustering the union is how signals compose without double-counting.
     Edge construction is the two signals' own one-shuffle shapes;
-    components run the O(log n) large-star/small-star rounds."""
+    components run the partition-local contraction, then
+    large-star/small-star rounds until the edge set is a star forest."""
     from tidb_spark.data import cluster as cl
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)

@@ -753,11 +753,13 @@ ORDER BY id
 
 @register("graph_wcc", oracle=WCC_ORACLE, tags=("graph",))
 def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weakly-connected components over a bounded e_knows subgraph — the
-    large-star/small-star alternation (O(log n) rounds of one groupBy +
-    one join; `data/cluster.py`, shared with dedup clustering) exposed as
-    a graph-family operator; the oracle walks the same undirected edges
-    with a recursive CTE.  The id bound keeps the oracle's all-pairs
+    """Weakly-connected components over a bounded e_knows subgraph — a
+    partition-local union-find contraction, then large-star/small-star
+    rounds (one groupBy + one join each) until the edge set is a star
+    forest (`data/cluster.py`, shared with dedup clustering), exposed as
+    a graph-family operator; this subgraph fits one partition, so the
+    contraction alone answers it.  The oracle walks the same undirected
+    edges with a recursive CTE.  The id bound keeps the oracle's all-pairs
     reachability set small; the Spark side has no such need at scale."""
     from tidb_spark.data.cluster import duplicate_clusters
 
